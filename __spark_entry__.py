@@ -65,6 +65,7 @@ from graph_rag_agent_spark.operators.text_analysis import (
     repetition_scores,
     token_counts,
 )
+from graph_rag_agent_spark.session import local_frame
 
 SF_DEFAULT = "/root/testdata/sf0.001"
 
@@ -101,8 +102,8 @@ def _crafted_corpus(spark: SparkSession) -> DataFrame:
     rows = [
         ("crafted", f"doc/{i}", f"commit{i}", "en", text) for i, text in CRAFTED_DOCS
     ]
-    return spark.createDataFrame(
-        rows, "repo string, path string, commit string, lang string, content string"
+    return local_frame(
+        spark, rows, "repo string, path string, commit string, lang string, content string"
     )
 
 
@@ -893,9 +894,9 @@ def _q_sllpa_overlap(spark, sf_dir):
     )
 
     nodes = sorted({v for e in _SLLPA_EDGES for v in e})
-    verts = spark.createDataFrame([(v,) for v in nodes], "id string")
-    wedges = spark.createDataFrame(
-        [(s, d, 1.0) for s, d in _SLLPA_EDGES], "s string, d string, weight double"
+    verts = local_frame(spark, [(v,) for v in nodes], "id string")
+    wedges = local_frame(
+        spark, [(s, d, 1.0) for s, d in _SLLPA_EDGES], "s string, d string, weight double"
     )
     return overlapping_label_propagation(
         verts, wedges, max_iter=_SLLPA_SWEEPS, min_association=_SLLPA_MIN_ASSOC

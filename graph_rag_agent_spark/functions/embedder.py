@@ -10,9 +10,10 @@ the canonicalization similarity join needs.
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import re
-from typing import List
+from typing import List, Tuple
 
 import numpy as np
 
@@ -33,16 +34,24 @@ def _token_features(text: str) -> List[str]:
     return [joined[i : i + 3] for i in range(len(joined) - 2)]
 
 
+@functools.lru_cache(maxsize=1 << 16)
+def _bucket(feat: str, dim: int) -> Tuple[int, float]:
+    """(bucket, sign) of one feature. Memoized: a corpus repeats a few
+    thousand distinct trigrams millions of times."""
+    h = int.from_bytes(hashlib.sha256(feat.encode("utf-8")).digest()[:8], "big")
+    return h % dim, 1.0 if (h >> 63) & 1 else -1.0
+
+
 def embed_text(text: str, dim: int = EMBEDDING_DIM) -> np.ndarray:
     """sha256 (not sha1) so the projection is reproducible in ANSI SQL —
     DuckDB: idx = ('0x' || substr(sha256(t), 1, 16))::UBIGINT % dim — which
     lets the driver's oracle check the full canonicalization pipeline."""
-    vec = np.zeros(dim, dtype=np.float64)
-    for feat in _token_features(text):
-        h = int.from_bytes(hashlib.sha256(feat.encode("utf-8")).digest()[:8], "big")
-        idx = h % dim
-        sign = 1.0 if (h >> 63) & 1 else -1.0
-        vec[idx] += sign
+    buckets = [_bucket(feat, dim) for feat in _token_features(text)]
+    if buckets:
+        idx, signs = zip(*buckets)
+        vec = np.bincount(idx, weights=signs, minlength=dim)
+    else:
+        vec = np.zeros(dim, dtype=np.float64)
     norm = float(np.linalg.norm(vec))
     if norm > 0:
         vec /= norm

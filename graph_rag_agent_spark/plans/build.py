@@ -38,6 +38,7 @@ from graph_rag_agent_spark.operators.communities import (
 )
 from graph_rag_agent_spark.operators.embeddings import embed_entities
 from graph_rag_agent_spark.operators.extraction import extract_chunks
+from graph_rag_agent_spark.session import local_frame
 from graph_rag_agent_spark.sources.catalog import TableCatalog
 
 
@@ -127,8 +128,9 @@ class BuildPipeline:
         )
 
     def flush_metrics(self) -> None:
-        mdf = self.spark.createDataFrame(
-            self._metrics, "stage string, row_count bigint, duration_ms bigint, run_id string"
+        mdf = local_frame(
+            self.spark, self._metrics,
+            "stage string, row_count bigint, duration_ms bigint, run_id string",
         ).withColumn("recorded_at", F.current_timestamp())
         self.catalog.write(mdf, "build_metrics", mode="append" if self.catalog.exists("build_metrics") else "overwrite")
         self._metrics = []

@@ -33,6 +33,7 @@ from graph_rag_agent_spark.operators.incremental import (
     chunks_of_docs,
     detect_changes,
 )
+from graph_rag_agent_spark.session import local_frame
 from graph_rag_agent_spark.sources.catalog import TableCatalog
 
 
@@ -139,15 +140,19 @@ class IncrementalUpdatePipeline:
         edges_raw = edges_raw.join(doomed_chunk_ids, on="chunk_id", how="left_anti")
 
         # --- N2: rebuild changed partitions only ---------------------------
+        # The chunker and the extractor are Python stages: each frame is
+        # materialized once where it is made, so every reader below (fresh
+        # results, all_chunks, the cache upsert) reuses it instead of
+        # re-running the Python tasks.
         changed_corpus = changes.added.unionByName(changes.modified)
         new_chunks = chunk_documents(
             changed_corpus, cfg.chunk_size, cfg.overlap, cfg.max_text_length
-        )
+        ).localCheckpoint(eager=True)
         cache = cat.read("extraction_cache") if cat.exists("extraction_cache") else None
         new_results = extract_chunks(
             new_chunks, extractor=self.extractor, cache=cache,
             max_gleanings=cfg.max_gleanings,
-        )
+        ).localCheckpoint(eager=True)
         # chunks whose text (= chunk_id) already exists in surviving docs are
         # already materialized — only genuinely fresh chunk ids contribute
         # new graph rows (keeps incremental ≡ full rebuild, no double rows)
@@ -155,7 +160,7 @@ class IncrementalUpdatePipeline:
             kept_chunks.select("chunk_id").dropDuplicates(["chunk_id"]),
             on="chunk_id",
             how="left_anti",
-        ).localCheckpoint(eager=True)
+        )
 
         # --- N3/N4: occurrences + edges are chunk-provenanced → plain union
         # after GC is exact; nodes/mentions re-derive from the merged
@@ -201,8 +206,6 @@ class IncrementalUpdatePipeline:
         )
 
         # --- persist new state ----------------------------------------------
-        if cache is not None:
-            new_results = new_results.localCheckpoint(eager=True)
         cat.upsert(
             "extraction_cache",
             new_results.select(F.col("chunk_id").alias("chunk_sha1"), "raw_result"),
@@ -320,7 +323,8 @@ class IncrementalUpdatePipeline:
         ).localCheckpoint(eager=True)
         cat.write(new_registry, "registry")
 
-        metrics = self.spark.createDataFrame(
+        metrics = local_frame(
+            self.spark,
             [
                 ("incremental", int(cat.read("edges").count()),
                  int((time.time() - t0) * 1000), self.run_id),

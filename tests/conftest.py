@@ -6,7 +6,7 @@ from graph_rag_agent_spark.sources.corpus import generate_corpus_pdf
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="graft-tests", master="local[8]", shuffle_partitions=8)
+    s = get_spark(app_name="graft-tests", shuffle_partitions=8)
     yield s
     s.stop()
 

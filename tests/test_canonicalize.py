@@ -197,3 +197,31 @@ def test_full_canonicalize_merges_variants(spark):
     assert triples == {("DataLoader", "calls", "HttpClient")}
     ids = {r.entity_id for r in res.nodes.collect()}
     assert "Data_Loader" not in ids and "DataLoader" in ids
+
+
+def test_embed_text_matches_plain_hash_loop():
+    """The memoized bucket + bincount embedder is bit-identical to the
+    plain per-occurrence sha256 loop (the formula the DuckDB oracle uses)."""
+    import hashlib
+
+    import numpy as np
+
+    from graph_rag_agent_spark.functions.embedder import _token_features
+    from graph_rag_agent_spark.sources.corpus import generate_corpus_pdf
+
+    def plain(text, dim):
+        vec = np.zeros(dim, dtype=np.float64)
+        for feat in _token_features(text):
+            h = int.from_bytes(hashlib.sha256(feat.encode("utf-8")).digest()[:8], "big")
+            vec[h % dim] += 1.0 if (h >> 63) & 1 else -1.0
+        norm = float(np.linalg.norm(vec))
+        if norm > 0:
+            vec /= norm
+        return vec
+
+    texts = ["", "ab", "Data_Loader", "DataLoader", "数据加载器 loader", "aaaa aaaa"]
+    for content in generate_corpus_pdf(20, seed=7).content:
+        texts.extend(content[i : i + 400] for i in range(0, len(content), 400))
+    for dim in (16, 64):
+        for t in texts:
+            assert np.array_equal(embed_text(t, dim), plain(t, dim)), (dim, t[:40])

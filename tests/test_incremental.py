@@ -180,3 +180,41 @@ def test_latest_wins_skips_nested_map_tiebreakers(spark):
     )
     out = latest_wins(df, keys=["id"], ts_col="last_updated").collect()
     assert len(out) == 1 and out[0].payload == "b"
+
+
+def test_run_once_extracts_each_fresh_chunk_once(spark, tmp_path):
+    """run_once evaluates the chunk → extract plan once: the extractor sees
+    every cache-miss chunk exactly once, not once per downstream reader."""
+    from graph_rag_agent_spark.config import BATCH_SEPARATOR
+    from graph_rag_agent_spark.functions.extractor import DeterministicCodeExtractor
+    from graph_rag_agent_spark.operators.chunker import chunk_documents
+
+    base = generate_corpus_pdf(20, seed=11)
+    v2 = base.iloc[2:].copy()
+    v2.loc[v2.index[:3], "content"] = (
+        v2.loc[v2.index[:3], "content"] + "\n\nclass FreshThing(DataLoader):\n    pass\n"
+    )
+    v2 = pd.concat([v2, generate_corpus_pdf(30, seed=12).iloc[-2:]], ignore_index=True)
+
+    cat = TableCatalog(spark, str(tmp_path / "cat"))
+    BuildPipeline(spark, cat).run(_corpus_df(spark, base))
+    cached = {r.chunk_sha1 for r in cat.read("extraction_cache").collect()}
+    old = dict(zip(zip(base.repo, base.path), base.content))
+    changed = v2[[old.get((r, p)) != c for r, p, c in zip(v2.repo, v2.path, v2.content)]]
+    misses = {
+        r.chunk_id for r in chunk_documents(_corpus_df(spark, changed)).collect()
+    } - cached
+    assert misses
+
+    calls = spark.sparkContext.accumulator(0)
+    base_extractor = DeterministicCodeExtractor()
+
+    def counting_extractor(text):
+        calls.add(text.count(BATCH_SEPARATOR) + 1)
+        return base_extractor(text)
+
+    res = IncrementalUpdatePipeline(spark, cat, extractor=counting_extractor).run_once(
+        _corpus_df(spark, v2)
+    )
+    assert res["changed"]
+    assert calls.value == len(misses)
